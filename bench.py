@@ -8,8 +8,8 @@ Default mode: run the headline suite at $SPARK_GRAFT_SF_DIR (default
 
 The headline number for the north metric (crawl-frontier URLs
 scheduled+deduped/sec) is `frontier_urls_per_sec`: one full admission round
-— canonicalize -> xxhash64 -> robots gate -> bloom prefilter -> exact seen
-anti-join -> per-host cap window -> politeness top-k — over a synthetic
+— canonicalize -> xxhash64 -> robots gate -> FR.admission_round (exact
+seen join, per-host cap window) -> politeness top-k — over a synthetic
 frontier derived from the sf tables (one URL per orders+lineitem row, 30%
 skewed onto one hot host, half pre-seeded as 'seen').
 
@@ -98,58 +98,46 @@ def _build_seen(raw):
     )
 
 
-def _scheduled_plan(spark, raw, seen, robots, budgets, cap):
+def _scheduled_plan(raw, seen, robots, budgets, cap, filters=None):
     """The full admission round as a DataFrame: canonicalize -> xxhash64 ->
-    relevance score -> batch dedup -> robots gate -> bloom prefilter ->
-    exact seen anti-join -> per-host cap -> politeness top-k.
+    relevance score -> batch dedup -> robots gate -> FR.admission_round
+    (optional bloom probe -> exact seen join -> per-host cap) -> politeness
+    top-k. Returns (scheduled, [handles to unpersist]).
 
-    Returns (scheduled, [handles to unpersist]). tag_seen and admit_with_cap
-    each consume their input TWICE (bloom fast/slow union; winners join-back)
-    — without persisting the branch points the candidate chain (Arrow score
-    UDF + dedup shuffle) is recomputed up to 4x per round."""
+    SPARK_GRAFT_BLOOM_PATH picks the engine's seen-join arm:
+      off      — plain shuffled join (DEFAULT: the engine's arm below
+                 bloom_min_frontier_rows; bench_runs/bloom_compare_r03.json)
+      invert   — broadcast the batch's distinct url_hashes as a semi-filter
+                 over the seen side (seen_invert_min_frontier_rows regime)
+      bucketed — bloom blobs built per bucket on the executors and probed
+                 by cogroup; `filters` passes a pre-built blob table (the
+                 steady state), else the blobs build inside the round"""
     from smartcrawler_spark.operators import frontier as FR
 
-    cands = FR.with_url_columns_deduped(raw, "url", {"news": 2.0, "item1": 0.5})
-    gated = FR.robots_gate(cands, robots)
-    # three selectable prefilter paths (on-path equality pytest-verified;
-    # off-path output equality asserted by --bloom-compare):
-    #   broadcast — blobs collect to the driver and broadcast whole; fast at
-    #               sandbox scale, impossible at 10^10 keys (~12 GB blobs)
-    #   bucketed  — executor-built blob table cogrouped with candidates per
-    #               bucket; zero driver traffic however large the frontier
-    #               (the engine crawl loop's path; plans/crawl.py:150)
-    #   off       — no prefilter: every candidate pays the exact anti-join
-    #               (DEFAULT since r3: mirrors the engine's adaptive policy,
-    #               which runs exact-join-only below bloom_min_frontier_rows
-    #               — measured faster at every sandbox-reachable size, see
-    #               bench_runs/bloom_compare_r03.json / BENCH.md)
-    #   invert    — no prefilter; tag_seen broadcasts the batch's distinct
-    #               url_hashes as a semi-filter over the seen side so the
-    #               frontier is scanned but never shuffled (the engine's
-    #               batch<<frontier regime; plans/crawl.py
-    #               seen_invert_min_frontier_rows)
     bloom_path = os.environ.get("SPARK_GRAFT_BLOOM_PATH", "off")
-    if bloom_path in ("off", "invert"):
-        pre = gated.persist()
-    elif bloom_path == "bucketed":
-        blobs_df = FR.build_bucket_blooms_df(seen, n_buckets=32)
-        pre = FR.bloom_probe_bucketed(gated, blobs_df, n_buckets=32).persist()
-    else:
-        blooms = FR.build_bucket_blooms(seen, n_buckets=32)
-        pre = FR.bloom_maybe_seen(spark, gated, blooms, n_buckets=32).persist()
-    tagged = FR.tag_seen(pre, seen, invert=(bloom_path == "invert")).persist()
-    admitted = FR.admit_with_cap(tagged, seen, cap=cap).filter("admitted")
+    if bloom_path not in ("off", "invert", "bucketed"):
+        raise ValueError(f"SPARK_GRAFT_BLOOM_PATH={bloom_path!r}: "
+                         "expected off, invert or bucketed")
+    if bloom_path == "bucketed" and filters is None:
+        filters = FR.build_bucket_blooms_df(seen, n_buckets=32)
+    cands = FR.with_url_columns_deduped(raw, "url", {"news": 2.0, "item1": 0.5})
+    tagged, handles = FR.admission_round(
+        FR.robots_gate(cands, robots), seen, cap,
+        invert=bloom_path == "invert",
+        filters=filters, n_buckets=32,
+    )
     scheduled = FR.politeness_topk(
-        admitted.select("url_canon", "url_hash", "host", "is_root", "score"),
+        tagged.filter("admitted").select(
+            "url_canon", "url_hash", "host", "is_root", "score"),
         budgets, default_budget=100, n_salts=8,
     )
-    return scheduled, [pre, tagged]
+    return scheduled, handles
 
 
-def run_admission_round(spark, raw, seen, robots, budgets, cap) -> dict:
+def run_admission_round(raw, seen, robots, budgets, cap, filters=None) -> dict:
     """Time one full admission round (inputs already cached)."""
     t0 = time.perf_counter()
-    scheduled, handles = _scheduled_plan(spark, raw, seen, robots, budgets, cap)
+    scheduled, handles = _scheduled_plan(raw, seen, robots, budgets, cap, filters)
     n_sched = scheduled.count()
     dt = time.perf_counter() - t0
     for h in handles:
@@ -157,7 +145,7 @@ def run_admission_round(spark, raw, seen, robots, budgets, cap) -> dict:
     return {"seconds": round(dt, 3), "scheduled": n_sched}
 
 
-def schedule_digest(spark, raw, seen, robots, budgets, cap) -> dict:
+def schedule_digest(raw, seen, robots, budgets, cap) -> dict:
     """Order-insensitive content digest of the round's scheduled output:
     per-row sha256('host|url_canon') truncated to 64 bits, summed mod 2^64.
     Commutative, so the union of host-shard outputs must reproduce the
@@ -165,7 +153,7 @@ def schedule_digest(spark, raw, seen, robots, budgets, cap) -> dict:
     sharded scaling evidence."""
     import hashlib
 
-    scheduled, handles = _scheduled_plan(spark, raw, seen, robots, budgets, cap)
+    scheduled, handles = _scheduled_plan(raw, seen, robots, budgets, cap)
     rows = scheduled.select("host", "url_canon").collect()
     for h in handles:
         h.unpersist()
@@ -191,7 +179,7 @@ def bench_frontier_round(spark, sf_dir, mult: int | None = None) -> dict:
     seen = _build_seen(raw).cache()
     n_seen = seen.count()
     robots, budgets, cap = _round_dims(spark, mult)
-    r = run_admission_round(spark, raw, seen, robots, budgets, cap)
+    r = run_admission_round(raw, seen, robots, budgets, cap)
     raw.unpersist()
     seen.unpersist()
     return {
@@ -635,10 +623,10 @@ def run_scaling_qualified(sf_dir: str, min_eff4: float = 0.6,
 
 
 def run_bloom_compare(sf_dir: str, mults=(4, 16),
-                      paths=("off", "broadcast", "bucketed")) -> dict:
+                      paths=("off", "bucketed")) -> dict:
     """Quantify the bloom prefilter (VERDICT r02 item 8): the full frontier
     round with the prefilter OFF (every candidate pays the exact anti-join)
-    vs ON via both blob transports, at 3M (mult=4) and 12M (mult=16) URLs.
+    vs ON (bucketed blob table), at 3M (mult=4) and 12M (mult=16) URLs.
     Each cell is a fresh subprocess (2 warm-ups, best-of-2 measured).
     NB the ON cells rebuild the blobs INSIDE the measured round; the engine
     amortizes rebuilds over `bloom_rebuild_every` rounds, so the steady-
@@ -747,20 +735,17 @@ def bloom_scale_cell_main():
     seen = spark.read.parquet(seen_path).cache()
     n_seen = seen.count()
     robots, budgets, cap = _round_dims(spark, mult)
-    rebuild_s = None
+    rebuild_s = blobs_df = None
     if path == "bucketed":
         t0 = time.perf_counter()
         blobs_df = FR.build_bucket_blooms_df(seen, n_buckets=32).cache()
         blobs_df.count()  # blobs materialized BEFORE the measured round
         rebuild_s = round(time.perf_counter() - t0, 3)
-        # _scheduled_plan rebuilds blobs inside the clock; patch the
-        # builder to hand back the pre-built (cached) blob table so the
-        # cell measures the STEADY state (probe + exact join on
-        # survivors), which is what the threshold decides about
-        FR.build_bucket_blooms_df = lambda *_a, **_k: blobs_df
-    # warm-up + best-of-2 measured (python workers, JIT, broadcast paths)
-    run_admission_round(spark, raw, seen, robots, budgets, cap)
-    runs = [run_admission_round(spark, raw, seen, robots, budgets, cap)
+    # the pre-built blob table goes in as `filters`, so the cell measures
+    # the STEADY state (probe + exact join on survivors), which is what
+    # the threshold decides about; warm-up + best-of-2 measured
+    run_admission_round(raw, seen, robots, budgets, cap, blobs_df)
+    runs = [run_admission_round(raw, seen, robots, budgets, cap, blobs_df)
             for _ in range(2)]
     best = min(runs, key=lambda r: r["seconds"])
     print(json.dumps({
@@ -871,14 +856,14 @@ def shard_round_main():
     seen = _build_seen(raw).cache()
     seen.count()
     robots, budgets, cap = _round_dims(spark, mult)
-    run_admission_round(spark, raw, seen, robots, budgets, cap)  # warm-up
+    run_admission_round(raw, seen, robots, budgets, cap)  # warm-up
     rounds = []
     for r in range(1, n_rounds + 1):
         if ready:
             open(f"{ready}_{r}", "w").close()
             _wait_for(f"{go}_{r}")
-        rounds.append(run_admission_round(spark, raw, seen, robots, budgets, cap))
-    dig = schedule_digest(spark, raw, seen, robots, budgets, cap)
+        rounds.append(run_admission_round(raw, seen, robots, budgets, cap))
+    dig = schedule_digest(raw, seen, robots, budgets, cap)
     print(json.dumps({"urls": n, "rounds": rounds, **dig}))
     spark.stop()
 

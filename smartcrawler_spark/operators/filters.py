@@ -4,8 +4,9 @@ Role in the frontier (north_rule): these are PREFILTERS in front of the
 exact anti-join — a candidate whose bucket filter says "definitely unseen"
 skips the exact join entirely; "maybe seen" candidates still go through it.
 False positives therefore cost one extra join lookup and can never corrupt
-the seen set; the exact anti-join (operators.frontier.seen_anti_join)
-remains the authority, matching the reference's insert-if-absent semantics
+the seen set; the exact seen join (operators.frontier.tag_seen, composed
+with the probe by operators.frontier.admission_round) remains the
+authority, matching the reference's insert-if-absent semantics
 (/root/reference/src/storage.rs:78-89) bit-for-bit.
 
 Keys are the engine's 64-bit `url_hash` (xxhash64 of the canonical URL), so
@@ -13,15 +14,17 @@ filter probes are pure uint64 numpy arithmetic — no string hashing in
 Python. Mixing uses the splitmix64 finalizer (public-domain constants).
 
 Scale design: one filter per `pmod(url_hash, n_buckets)` bucket, built
-inside `applyInPandas` ON THE EXECUTORS (one task per bucket — the build
-never funnels raw URLs through the driver; only the finished ~KB-MB filter
-blobs are collected and re-broadcast). At 10^10 URLs you'd keep
-n_buckets == number of frontier partitions and persist the blobs next to
-each snapshot so resume doesn't rebuild (rebuild-on-miss stays correct).
+inside `applyInPandas` ON THE EXECUTORS (one task per bucket) and kept as
+(bucket, bloom, cuckoo) rows in the crawl's bucketed filter table
+(plans.crawl `t_filters`), so blobs never pass through the driver and
+resume reuses them. At 10^10 URLs keep n_buckets == number of frontier
+partitions so probe tasks align with frontier partitions.
 
-The cuckoo filter complements the bloom: it supports DELETE (bloom can't),
-which the engine uses for the mutable recent-rounds delta, and gives a
-bounded false-positive rate at higher load factors.
+The cuckoo filter complements the bloom: the blooms cover the frontier as
+of the last rebuild, and a per-bucket cuckoo holds the delta admitted
+since then — a sliding window over the rounds since the rebuild. It
+supports DELETE (bloom can't) and gives a bounded false-positive rate at
+higher load factors.
 """
 
 from __future__ import annotations
@@ -188,171 +191,3 @@ class CuckooFilter:
         cf.table = np.frombuffer(blob[8:], dtype=np.uint16).reshape(nb, cls.SLOTS).copy()
         return cf
 
-
-class SeenFilterState:
-    """The persistent bloom+cuckoo URL-seen prefilter state of the crawl loop.
-
-    Division of labor (the amortization the north rule's 'bloom/cuckoo'
-    pairing buys):
-    * per-bucket BLOOMS cover the bulk frontier — rebuilt from the frontier
-      table only every `rebuild_every` rounds (an executor-side pass);
-    * the CUCKOO filter covers the DELTA — URLs admitted since the last
-      bloom rebuild, added incrementally per round (and deletable, which a
-      bloom can't do — e.g. rolling back a round on resume).
-
-    A URL is 'maybe seen' iff bloom(bucket(h)) OR cuckoo says so; the exact
-    anti-join downstream remains the correctness authority, so filter
-    staleness or saturation can only cost extra join probes.
-
-    Persistence: one pickle per frontier snapshot version next to the
-    checkpoint, so resume reuses filters instead of rebuilding (and a
-    missing/corrupt file just degrades to rebuild).
-
-    The delta is PER-BUCKET (same url_hash % n_buckets layout as the
-    blooms). The crawl loop updates it on the executors
-    (operators.frontier.update_bucket_cuckoos: applyInPandas per bucket,
-    only the finished blobs reach the driver) — the driver never collects
-    admitted url_hash rows, so the per-round driver traffic is O(n_buckets
-    x blob) regardless of how many URLs a round admits. add_delta /
-    remove_delta below are the driver-side small-path equivalents (tests,
-    rollback).
-    """
-
-    def __init__(self, n_buckets: int = 16, rebuild_every: int = 4,
-                 cuckoo_capacity: int = 1 << 17):
-        self.n_buckets = n_buckets
-        self.rebuild_every = rebuild_every
-        self.cuckoo_capacity = cuckoo_capacity
-        self.blooms: dict[int, bytes] = {}
-        self.cuckoos: dict[int, bytes] = {}  # bucket -> cuckoo blob (delta)
-        self.rounds_since_rebuild: int | None = None  # None = never built
-
-    # -- per-bucket delta helpers ---------------------------------------------
-
-    def _bucket_of(self, keys) -> np.ndarray:
-        return _as_u64(keys).astype(np.int64) % self.n_buckets
-
-    def _bucket_filter(self, b: int) -> CuckooFilter:
-        blob = self.cuckoos.get(int(b))
-        return CuckooFilter.from_bytes(blob) if blob else CuckooFilter(
-            self.cuckoo_capacity
-        )
-
-    def contains_delta(self, keys) -> np.ndarray:
-        """Per-bucket delta membership probe (tests / driver small path).
-        A saturated (degraded) bucket answers True for every key."""
-        keys = list(keys)
-        buckets = self._bucket_of(keys)
-        out = np.zeros(len(keys), dtype=bool)
-        for b in set(buckets.tolist()):
-            mask = buckets == b
-            if self.cuckoos.get(int(b)) == CUCKOO_SATURATED:
-                out[mask] = True
-                continue
-            ck = self._bucket_filter(b)
-            out[mask] = ck.contains_many([k for k, m in zip(keys, mask) if m])
-        return out
-
-    def needs_rebuild(self) -> bool:
-        return (
-            self.rounds_since_rebuild is None
-            or self.rounds_since_rebuild >= self.rebuild_every
-            # a degraded bucket forces every candidate in it through the
-            # exact join — rebuild early to restore the fast path
-            or any(v == CUCKOO_SATURATED for v in self.cuckoos.values())
-        )
-
-    def rebuilt(self, blooms: dict[int, bytes]) -> None:
-        """Install freshly built blooms; the delta cuckoos reset (their keys
-        are now covered by the blooms)."""
-        self.blooms = blooms
-        self.cuckoos = {}
-        self.rounds_since_rebuild = 0
-
-    def absorb_bucket_blobs(self, blobs: dict[int, bytes]) -> None:
-        """Install executor-updated per-bucket delta blobs (the output of
-        operators.frontier.update_bucket_cuckoos) and count the round."""
-        self.cuckoos.update({int(b): bytes(v) for b, v in blobs.items()})
-        self.rounds_since_rebuild = (self.rounds_since_rebuild or 0) + 1
-
-    def add_delta(self, url_hashes) -> int:
-        """Driver-side small path: insert keys into their buckets' cuckoos.
-        Returns the number actually inserted. A bucket that cannot absorb
-        ALL its keys is marked CUCKOO_SATURATED: a key missing from both
-        filters is a false NEGATIVE (the bloom fast path would re-admit it
-        without the exact join), so the degraded bucket must answer
-        maybe_seen=True for everything until the next bloom rebuild."""
-        url_hashes = list(url_hashes)
-        buckets = self._bucket_of(url_hashes)
-        ok = 0
-        for b in set(buckets.tolist()):
-            if self.cuckoos.get(int(b)) == CUCKOO_SATURATED:
-                continue  # already degraded; stays degraded until rebuild
-            keys = [k for k, m in zip(url_hashes, buckets == b) if m]
-            ck = self._bucket_filter(b)
-            inserted = ck.add_many(keys)
-            ok += inserted
-            self.cuckoos[int(b)] = (
-                ck.to_bytes() if inserted == len(keys) else CUCKOO_SATURATED
-            )
-        self.rounds_since_rebuild = (self.rounds_since_rebuild or 0) + 1
-        return ok
-
-    def remove_delta(self, url_hashes) -> int:
-        """Roll back keys (e.g. a round being replayed after resume).
-        Saturated buckets stay degraded (their contents are unknown)."""
-        url_hashes = list(url_hashes)
-        buckets = self._bucket_of(url_hashes)
-        removed = 0
-        for b in set(buckets.tolist()):
-            if self.cuckoos.get(int(b)) == CUCKOO_SATURATED:
-                continue
-            ck = self._bucket_filter(b)
-            removed += sum(
-                ck.delete(int(k)) for k, m in zip(url_hashes, buckets == b) if m
-            )
-            self.cuckoos[int(b)] = ck.to_bytes()
-        return removed
-
-    # -- persistence ---------------------------------------------------------
-
-    def save(self, path: str) -> None:
-        import os
-        import pickle
-
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            pickle.dump(
-                {
-                    "n_buckets": self.n_buckets,
-                    "rebuild_every": self.rebuild_every,
-                    "cuckoo_capacity": self.cuckoo_capacity,
-                    "blooms": self.blooms,
-                    "cuckoos": self.cuckoos,
-                    "rounds_since_rebuild": self.rounds_since_rebuild,
-                },
-                f,
-            )
-        os.rename(tmp, path)
-
-    @classmethod
-    def load(cls, path: str) -> "SeenFilterState | None":
-        import os
-        import pickle
-
-        if not os.path.exists(path):
-            return None
-        try:
-            with open(path, "rb") as f:
-                d = pickle.load(f)
-        except Exception:
-            return None  # degrade to rebuild
-        try:
-            st = cls(d["n_buckets"], d["rebuild_every"], d["cuckoo_capacity"])
-            st.blooms = d["blooms"]
-            st.cuckoos = d["cuckoos"]
-            st.rounds_since_rebuild = d["rounds_since_rebuild"]
-        except KeyError:
-            return None  # older layout -> degrade to rebuild
-        return st

@@ -1,12 +1,16 @@
 """Frontier dataflow operators — the relational core of the crawl engine.
 
 Each function is a pure DataFrame -> DataFrame transform; the driver loop in
-plans.crawl composes them per round. Reference semantics being re-expressed:
+plans.crawl composes them per round. The admission half of a round
+(optional bloom probe -> exact seen tag -> per-host cap) is composed in ONE
+place, `admission_round`, which the crawl loop, the streaming ingest and
+bench.py all call. Reference semantics being re-expressed:
 
 * seen-set insert-if-absent  -> exact LEFT ANTI join on (url_hash, url_canon)
   (/root/reference/src/storage.rs:78-89), with partitioned bloom+cuckoo
-  prefilters (operators.filters) splitting off definitely-novel candidates
-  so only "maybe seen" rows pay the join;
+  prefilters (operators.filters, blobs in the crawl's bucketed filter
+  table) splitting off definitely-novel candidates so only "maybe seen"
+  rows pay the join;
 * per-domain URL cap         -> per-host row_number window against remaining
   room (/root/reference/src/main.rs:60,82-89);
 * politeness                 -> per-host budget top-k window, TWO-PHASE over
@@ -32,9 +36,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from ..functions import urls as U
 from ..functions.relevance import relevance_score_udf
@@ -174,127 +177,6 @@ def robots_gate_rfc(candidates: DataFrame, rules: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def build_bucket_blooms(
-    frontier: DataFrame, n_buckets: int = 16, fp_rate: float = 0.01
-) -> dict[int, bytes]:
-    """Build one bloom filter per url_hash bucket ON THE EXECUTORS
-    (applyInPandas: one task per bucket; only the finished blobs reach the
-    driver). At production scale persist these blobs beside each frontier
-    snapshot and rebuild only missed buckets."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["bucket"].iloc[0])
-        bf = BloomFilter(capacity=max(len(pdf), 64), fp_rate=fp_rate)
-        bf.add_many(pdf["url_hash"].to_numpy())
-        return pd.DataFrame({"bucket": [b], "blob": [bf.to_bytes()]})
-
-    rows = (
-        frontier.select(
-            F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-            "url_hash",
-        )
-        .groupBy("bucket")
-        .applyInPandas(build, "bucket int, blob binary")
-        .collect()
-    )
-    return {r["bucket"]: bytes(r["blob"]) for r in rows}
-
-
-def bloom_maybe_seen(
-    spark: SparkSession,
-    candidates: DataFrame,
-    blooms: dict[int, bytes],
-    n_buckets: int,
-    cuckoo_blobs: dict[int, bytes] | None = None,
-    track: list | None = None,
-) -> DataFrame:
-    """Add `maybe_seen` by probing the broadcast bucket blooms (bulk
-    frontier) plus the optional per-bucket cuckoo delta (URLs admitted
-    since the last bloom rebuild) in one Arrow pandas UDF. False =>
-    DEFINITELY novel (neither filter has false negatives for inserted
-    keys).
-
-    Legacy broadcast-probe path (bench/small jobs): the crawl loop uses
-    bloom_probe_bucketed, which never ships the full blob set. Pass a
-    `track` list to receive the broadcast handle so the caller can
-    unpersist/destroy it once the round's actions finish (otherwise stale
-    blob broadcasts accumulate over a long-lived session)."""
-    from .filters import CuckooFilter
-
-    bcast = spark.sparkContext.broadcast((blooms, cuckoo_blobs or {}))
-    if track is not None:
-        track.append(bcast)
-
-    @F.pandas_udf(BooleanType())
-    def probe(url_hash: pd.Series) -> pd.Series:  # noqa: ANN001 — real hints
-        # (PEP-563 string hints from `__future__ annotations` are not
-        # resolvable by pyspark's typehint inference for closures; the
-        # decorator still needs concrete pd.Series hints, provided here)
-        blobs, ck_blobs = bcast.value
-        h = url_hash.to_numpy()
-        buckets = h % n_buckets  # python % matches pmod for negatives
-        res = np.zeros(len(h), dtype=bool)
-        for b in set(buckets.tolist()):
-            mask = buckets == b
-            blob = blobs.get(int(b))
-            if blob is not None:
-                bf = BloomFilter.from_bytes(blob)
-                res[mask] = np.asarray(bf.contains_many(h[mask]), dtype=bool)
-            ck_blob = ck_blobs.get(int(b))
-            if ck_blob == CUCKOO_SATURATED:
-                res[mask] = True  # degraded bucket: exact join for all
-            elif ck_blob is not None:
-                ck = CuckooFilter.from_bytes(ck_blob)
-                res[mask] |= np.asarray(ck.contains_many(h[mask]), dtype=bool)
-        return pd.Series(res, index=url_hash.index)
-
-    return candidates.withColumn("maybe_seen", probe(F.col("url_hash")))
-
-
-def update_bucket_cuckoos(
-    spark: SparkSession,
-    admitted: DataFrame,
-    cuckoos: dict[int, bytes],
-    n_buckets: int,
-    capacity: int,
-) -> dict[int, bytes]:
-    """Executor-side delta maintenance: insert this round's admitted
-    url_hashes into their buckets' cuckoo filters via applyInPandas — one
-    task per touched bucket, only the finished blobs travel to the driver.
-    At 10^10 scale the driver never sees admitted rows; per-round driver
-    traffic is O(touched_buckets x blob size) however large the admission
-    is. Returns the merged bucket->blob dict."""
-    from .filters import CuckooFilter
-
-    bcast = spark.sparkContext.broadcast(cuckoos)
-
-    def upd(pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(pdf["bucket"].iloc[0])
-        blob = bcast.value.get(b)
-        if blob == CUCKOO_SATURATED:  # degraded: stays degraded until rebuild
-            return pd.DataFrame({"bucket": [b], "blob": [CUCKOO_SATURATED]})
-        ck = CuckooFilter.from_bytes(blob) if blob else CuckooFilter(capacity)
-        inserted = ck.add_many(pdf["url_hash"].to_numpy())
-        # overflow => false NEGATIVES (fast path would re-admit seen URLs):
-        # mark the bucket degraded so every probe in it pays the exact join
-        out = ck.to_bytes() if inserted == len(pdf) else CUCKOO_SATURATED
-        return pd.DataFrame({"bucket": [b], "blob": [out]})
-
-    rows = (
-        admitted.select(
-            F.pmod(F.col("url_hash"), F.lit(n_buckets)).cast("int").alias("bucket"),
-            "url_hash",
-        )
-        .groupBy("bucket")
-        .applyInPandas(upd, "bucket int, blob binary")
-        .collect()
-    )
-    bcast.unpersist(blocking=False)  # eager op: safe to release immediately
-    out = dict(cuckoos)
-    out.update({int(r["bucket"]): bytes(r["blob"]) for r in rows})
-    return out
-
-
 FILTER_BLOB_SCHEMA = "bucket int, bloom binary, cuckoo binary"
 
 
@@ -302,8 +184,8 @@ def build_bucket_blooms_df(
     frontier: DataFrame, n_buckets: int = 16, fp_rate: float = 0.01
 ) -> DataFrame:
     """DataFrame-native bloom rebuild: one bloom per url_hash bucket, built
-    ON THE EXECUTORS (applyInPandas, one task per bucket). Unlike
-    build_bucket_blooms the blobs NEVER travel to the driver — the caller
+    ON THE EXECUTORS (applyInPandas, one task per bucket). The blobs NEVER
+    travel to the driver — the caller
     commits the returned (bucket, bloom, cuckoo=null) rows to the bucketed
     filter table (plans.crawl: t_filters.commit_upsert), and probes read
     them back per bucket. Driver traffic is zero however large the
@@ -454,8 +336,8 @@ def tag_seen(
     size (plans.crawl: seen_invert_max_batch) — the broadcast is ~8B/key.
     Measured at a 61M-row frontier: bench_runs/bloom_compare_r05.json.
 
-    NB: the fast/slow split reads `candidates` TWICE — persist it upstream
-    or its lineage (score UDF, dedup shuffle) recomputes."""
+    NB: the fast/slow split reads `candidates` TWICE — admission_round
+    persists it, or its lineage (score UDF, dedup shuffle) recomputes."""
     seen_keys = frontier.select("url_hash", "url_canon", F.lit(True).alias("_seen"))
     if invert:
         probe = candidates
@@ -523,7 +405,7 @@ def admit_with_cap(
     exchanges it avoids (~190 MB). The two-phase salted windows over
     §2.3-projected rows are already the cheap shape here.
 
-    NB: the join-back reads `tagged` TWICE — persist it upstream."""
+    NB: the join-back reads `tagged` TWICE — admission_round persists it."""
     counts = frontier.groupBy("host").agg(F.count("*").alias("_n"))
     elig_expr = ~F.col("robots_blocked") & ~F.col("seen")
     if "trap_blocked" in tagged.columns:  # opt-in spider-trap hygiene
@@ -559,6 +441,48 @@ def admit_with_cap(
         .withColumn("admitted", F.coalesce(F.col("_win"), F.lit(False)))
         .drop("_n", "_room", "_win", "eligible")
     )
+
+
+def admission_round(
+    gated: DataFrame,
+    frontier: DataFrame,
+    cap: int,
+    *,
+    invert: bool = False,
+    filters: DataFrame | None = None,
+    n_buckets: int | None = None,
+) -> tuple[DataFrame, list[DataFrame]]:
+    """The seen-join + cap half of one admission round, the single
+    composition the crawl loop, the streaming ingest and bench.py share:
+    robots-gated candidates -> optional bucketed bloom probe -> exact
+    tag_seen -> admit_with_cap. Returns (tagged, handles): `tagged` carries
+    `seen` and `admitted`; `handles` are the DataFrames persisted here,
+    which the caller unpersists after its last action on `tagged`.
+
+    The seen-join arm is the caller's choice (plans.crawl picks it from the
+    frontier estimate and the batch size): plain shuffled join by default,
+    `invert=True` for the broadcast-semi plan, `filters` (the bucketed
+    (bucket, bloom, cuckoo) blob table, `n_buckets` of them) for the bloom
+    prefilter. Every arm gives the same output.
+
+    Persisted are exactly the DataFrames read twice: `gated` on the invert
+    or bloom arm (unless the caller already persisted it), the probe output
+    (tag_seen's fast/slow split), and the tag_seen output (admit_with_cap's
+    winners join-back)."""
+    handles: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        df = df.persist()
+        handles.append(df)
+        return df
+
+    cands = gated
+    if (invert or filters is not None) and not gated.is_cached:
+        cands = keep(gated)
+    if filters is not None:
+        cands = keep(bloom_probe_bucketed(cands, filters, n_buckets))
+    pre_admit = keep(tag_seen(cands, frontier, invert=invert))
+    return admit_with_cap(pre_admit, frontier, cap), handles
 
 
 # ---------------------------------------------------------------------------
@@ -878,7 +802,8 @@ def global_crawl_order(scheduled: DataFrame, round_no: int,
     The range-partitioned input is localCheckpointed: offsets and ranks
     must be computed from the SAME materialized partitioning (a lazy
     recompute could resample different range boundaries between the count
-    pass and the rank pass)."""
+    pass and the rank pass). The caller frees that materialization with
+    release_checkpoints(result) once its last action on the result ran."""
     spark = scheduled.sparkSession
     n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     parts = (
@@ -908,6 +833,21 @@ def global_crawl_order(scheduled: DataFrame, round_no: int,
         (F.row_number().over(w) + offset).cast("int").alias("seq"),
         "url_canon",
     )
+
+
+def release_checkpoints(df: DataFrame) -> None:
+    """Unpersist the localCheckpoint materializations `df` reads from
+    (global_crawl_order and apportion_budget each make one). Call it after
+    the last action on `df`: a released local checkpoint cannot be
+    recomputed, and an unreleased one stays cached for the session."""
+    sc = df.sparkSession.sparkContext._jsc.sc()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" and leaf.rdd().isLocallyCheckpointed():
+            # SparkContext.unpersistRDD, not RDD.unpersist: the latter logs
+            # a lineage-truncation warning on every call
+            sc.unpersistRDD(leaf.rdd().id(), False)
 
 
 def anchor_relevance(docs: DataFrame, keywords: dict[str, int],
@@ -988,7 +928,9 @@ def apportion_budget(weights: DataFrame, total: int,
 
     Weights must be non-negative; total*max(weight) must fit in int64
     (with 10^8 hosts and int32-ish centrality scores that leaves 10^2
-    headroom — rescale weights first if feeding raw 64-bit scores).
+    headroom — rescale weights first if feeding raw 64-bit scores). The
+    remainder ranking reads a localCheckpoint; free it with
+    release_checkpoints(result) after the last action on the result.
     """
     spark = weights.sparkSession
     w_sum = weights.agg(F.sum(F.col(weight_col).cast("long"))).collect()[0][0]

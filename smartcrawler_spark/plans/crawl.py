@@ -6,8 +6,13 @@ Per round (reference phases at /root/reference/src/main.rs:57-135):
     pending --politeness_topk--> scheduled --crawl_log append (total order)
     scheduled --fetch join vs documents--> SUCCESS/FAILED + title
     fetched --explode 'a' spans--> resolve/same-domain --> candidates
-    candidates --robots gate --> bloom prefilter --> exact seen tag
-               --> per-host cap --> admitted  --> frontier MERGE + commit
+    candidates --robots gate --> FR.admission_round (optional bloom probe
+               --> exact seen tag --> per-host cap) --> admitted
+               --> frontier MERGE + commit
+
+Each round picks one seen-join arm (`CrawlJob.seen_arm`): "plain" shuffled
+join, "invert" broadcast-semi join, or "bloom" bucketed prefilter. All three
+give the same crawl.
 
 State lives in snapshot tables (frontier / crawl_log / metrics / filters),
 committed once per round: the next round reads the committed parquet back,
@@ -24,7 +29,9 @@ Commit-path scale design (all per-round I/O is O(round), never O(table)):
   re-references history);
 * bloom/cuckoo seen-prefilter blobs — a bucketed snapshot table probed and
   updated via per-bucket cogroups on the executors; blob bytes never
-  travel through the driver and are never broadcast in toto.
+  travel through the driver and are never broadcast in toto. Its manifest
+  meta (rounds_since_rebuild, round, filters_degraded) is the filter
+  state; the cuckoo delta covers the admissions since the last rebuild.
 
 Determinism contract (matched bit-for-bit by smartcrawler_spark.oracle):
 admission and scheduling order is (is_root desc, score desc, url_canon asc);
@@ -40,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..operators import frontier as FR
+from ..operators.filters import CUCKOO_SATURATED
 from ..sources.snapshot import BucketedSnapshotTable, SnapshotTable
 
 FRONTIER_SCHEMA = (
@@ -62,7 +70,6 @@ class EngineConfig:
                                   # bucket ~ one executor-friendly partition
     cuckoo_capacity: int = 1 << 17
     salt_buckets: int = 8
-    use_bloom: bool = True
     bloom_rebuild_every: int = 4  # rounds between full bloom rebuilds
     bloom_min_frontier_rows: int = 500_000_000
     # ^ adaptive prefilter floor: MEASURED twice. r3 (bench_runs/
@@ -80,7 +87,8 @@ class EngineConfig:
     # 10^9+ frontier, where broadcasting the batch is off the table and
     # the full shuffled join is the thing to beat). Below the floor the
     # loop silently runs exact-join-only — same output, measured faster;
-    # the filter table just stays stale.
+    # the filter table just stays stale. Set it above any reachable
+    # frontier size to keep the prefilter off.
     seen_invert_min_frontier_rows: int = 10_000_000
     seen_invert_max_batch: int = 10_000_000
     # ^ inverted seen-join regime (r5, bench_runs/bloom_compare_r05.json):
@@ -269,13 +277,17 @@ class CrawlJob:
             self.t_hoststats = SnapshotTable(checkpoint_dir, "host_stats")
             self.t_hostrank = SnapshotTable(checkpoint_dir, "host_rank")
             # bloom/cuckoo blobs live in their own bucketed table (bucket id
-            # IS the key, so pmod is the identity) — replaces the round-1
-            # driver pickle; probe/update cogroup against it per bucket
+            # IS the key, so pmod is the identity); probe/update cogroup
+            # against it per bucket
             self.t_filters = BucketedSnapshotTable(
                 checkpoint_dir, "filters", n_buckets=cfg.bloom_buckets,
                 key_col="bucket",
             )
         self._pending_filter_update: DataFrame | None = None
+        # the round's persisted working set, unpersisted after its commit
+        self._round_caches: list[DataFrame] = []
+        self.seen_arm: str | None = None  # "plain" | "invert" | "bloom",
+                                          # as the last admission chose
 
         # documents: canonical fetch key precomputed once. The join key is
         # the 8-byte doc_hash (same xxhash64 discipline as the seen
@@ -332,8 +344,9 @@ class CrawlJob:
                ) -> tuple[DataFrame, DataFrame]:
         """raw_urls(url) -> (new frontier rows, per-fate/per-partition metrics).
 
-        Mirrors oracle.admit: canon+distinct, robots gate, seen dedup
-        (bloom fast path + exact authority), per-host cap. `anchor_boost`
+        Mirrors oracle.admit: canon+distinct, robots gate, then
+        FR.admission_round (seen dedup on the arm chosen here, per-host
+        cap); boosts, host blocks and fates stay here. `anchor_boost`
         (url_canon, _anchor_hits) — built by run_round when
         cfg.anchor_keywords is set — adds the incoming-anchor vote to the
         admission score after the 1-column dedup."""
@@ -398,16 +411,9 @@ class CrawlJob:
                             F.coalesce(F.col("_tb"), F.lit(False)))
                 .drop("_tb")
             )
-        cands = self._robots_gate(cands, self.robots)
-        # tag_seen (bloom fast/slow union) and admit_with_cap (winners
-        # join-back) each read their input TWICE — persist the branch points
-        # or the candidate chain (score UDF + dedup shuffle) recomputes 4x.
-        # Per-round batches are politeness-bounded, so this cache is small.
-        self._round_caches = getattr(self, "_round_caches", [])
-        cands = cands.persist()
-        self._round_caches.append(cands)
-        # adaptive exact-seen strategy (frontier estimate from parquet
-        # footers / Iceberg manifest stats, no scan):
+        gated = self._robots_gate(cands, self.robots)
+        # adaptive exact-seen arm (frontier estimate from parquet footers /
+        # Iceberg manifest stats, no scan):
         #   invert — frontier dwarfs the batch and the batch fits a
         #            broadcast: semi-filter the frontier by the batch's
         #            hashes; the big side never shuffles (fastest measured
@@ -416,19 +422,19 @@ class CrawlJob:
         #            amortized blob prefilter trims the slow-join side
         #   plain  — small frontier: the shuffled join alone is cheapest
         frontier_rows = self.t_frontier.row_count_estimate()
-        invert_now = False
+        self.seen_arm = "plain"
         if frontier_rows >= self.cfg.seen_invert_min_frontier_rows:
-            # count on the persisted cache — materializes work later
-            # actions need anyway, and doubles as the batch-size metric
-            invert_now = cands.count() <= self.cfg.seen_invert_max_batch
-        bloom_now = (
-            self.cfg.use_bloom
-            and not invert_now
-            and frontier_rows >= self.cfg.bloom_min_frontier_rows
-        )
-        self._bloom_active = bloom_now
-        self._invert_active = invert_now
-        if bloom_now:
+            # count on the persisted batch — admission_round reads the same
+            # cache, and the count doubles as the batch-size metric
+            gated = gated.persist()
+            self._round_caches.append(gated)
+            if gated.count() <= self.cfg.seen_invert_max_batch:
+                self.seen_arm = "invert"
+        if (self.seen_arm == "plain"
+                and frontier_rows >= self.cfg.bloom_min_frontier_rows):
+            self.seen_arm = "bloom"
+        filters = None
+        if self.seen_arm == "bloom":
             # amortized prefilter: blooms cover the bulk frontier (rebuilt
             # every rebuild_every rounds), the cuckoo delta covers rounds
             # since the last rebuild. Blobs live in the bucketed filter
@@ -458,16 +464,16 @@ class CrawlJob:
                     changed_buckets=None,  # full replace: delta absorbed
                     meta={"rounds_since_rebuild": 0, "round": round_no},
                 )
-            filters_df = self.t_filters.read(self.spark)
-            cands = FR.bloom_probe_bucketed(
-                cands, filters_df, self.cfg.bloom_buckets
-            ).persist()
-            self._round_caches.append(cands)
-        pre_admit = FR.tag_seen(cands, frontier, invert=invert_now).persist()
-        tagged = FR.admit_with_cap(pre_admit, frontier, self.cfg.max_urls_per_host)
-        tagged.cache()
-        # dropped (unpersisted) after the round's snapshot commit
-        self._round_caches.extend([pre_admit, tagged])
+            filters = self.t_filters.read(self.spark)
+        tagged, handles = FR.admission_round(
+            gated, frontier, self.cfg.max_urls_per_host,
+            invert=self.seen_arm == "invert",
+            filters=filters, n_buckets=self.cfg.bloom_buckets,
+        )
+        # metrics, new rows and the cuckoo update all read `tagged`; the
+        # whole set is dropped (unpersisted) after the round's commit
+        tagged = tagged.persist()
+        self._round_caches += [*handles, tagged]
 
         lineage = F.concat(
             F.lit(f"round={round_no};src=admit;frontier_v="),
@@ -507,7 +513,7 @@ class CrawlJob:
                 F.lit(None).cast("string").alias("title"),
             )
         )
-        if bloom_now:
+        if self.seen_arm == "bloom":
             # feed the admitted keys into the per-bucket cuckoo delta ON THE
             # EXECUTORS (cogroup per bucket): the update emits replacement
             # blob rows for TOUCHED buckets only, committed in _commit_round
@@ -545,16 +551,12 @@ class CrawlJob:
         if metrics is not None:
             self.t_metrics.append(metrics, meta=lineage)
         if self._pending_filter_update is not None:
-            from pyspark.sql import functions as _F
-
-            from ..operators.filters import CUCKOO_SATURATED
-
             prev_meta = self.t_filters.latest_meta()
             # persist the (tiny: touched buckets only) update so the
             # degraded-bucket scan below doesn't re-run the cogroup
             upd = self._pending_filter_update.persist()
             degraded = bool(
-                upd.filter(_F.col("cuckoo") == _F.lit(CUCKOO_SATURATED))
+                upd.filter(F.col("cuckoo") == F.lit(CUCKOO_SATURATED))
                 .limit(1).count()
             )
             self.t_filters.commit_upsert(
@@ -574,8 +576,9 @@ class CrawlJob:
         self.t_frontier.commit_upsert(frontier_changed, changed_buckets,
                                       meta=lineage)
         # everything is on disk now -> drop the round's working-set caches
-        for df in getattr(self, "_round_caches", []):
+        for df in self._round_caches:
             df.unpersist()
+        self._round_caches = []
         ce = self.cfg.compact_every
         if ce and round_no > 0 and round_no % ce == 0:
             # content-preserving maintenance: collapse the append-only
@@ -587,7 +590,6 @@ class CrawlJob:
             self.t_metrics.compact(self.spark)
             self.t_frontier.expire_older_than(keep_last=4)
             self.t_filters.expire_older_than(keep_last=4)
-        self._round_caches = []
 
     # ------------------------------------------------------------- lifecycle
 
@@ -836,6 +838,7 @@ class CrawlJob:
         n_sched = scheduled.count()
         if n_sched == 0:
             scheduled.unpersist()
+            FR.release_checkpoints(budgets)
             return {"round": round_no, "scheduled": 0}
 
         log_rows = FR.global_crawl_order(scheduled, round_no)
@@ -950,6 +953,10 @@ class CrawlJob:
         self._commit_round(merged, changed_buckets, round_no, log_rows,
                            admit_metrics.unionByName(fetch_metrics))
         scheduled.unpersist()
+        # the crawl-order and apportionment checkpoints (the log rows and
+        # budgets read them) are done once the round's commit has run
+        FR.release_checkpoints(log_rows)
+        FR.release_checkpoints(budgets)
         return {"round": round_no, "scheduled": n_sched}
 
     def run(self) -> dict:

@@ -14,10 +14,11 @@ snapshot frontier, using
   within-watermark variant is what lets the watermark actually evict
   per-key dedup state (plain `dropDuplicates` without the event-time
   column in its keys keeps state forever),
-* `foreachBatch` to run the EXACT batch admission pipeline (bloom prefilter
-  + exact anti-join + cap) against the committed frontier snapshot — so the
-  streaming path shares one implementation and one determinism contract
-  with the batch path per micro-batch.
+* `foreachBatch` to run the batch admission round
+  (`operators.frontier.admission_round`: exact seen join + per-host cap)
+  against the committed frontier snapshot — the same function the crawl
+  loop calls, so the streaming path shares one implementation and one
+  determinism contract with the batch path per micro-batch.
 
 At scale this runs with a real checkpointLocation on durable storage; the
 in-stream dropDuplicates only reduces state, the snapshot-backed exact
@@ -82,15 +83,10 @@ def run_frontier_ingest(
         frontier = frontier_table.read(spark_b)
         if frontier is None:
             frontier = spark_b.createDataFrame([], FRONTIER_SCHEMA)
-        gated = FR.robots_gate(batch, robots)
-        # admit_with_cap reads its input TWICE (winners join-back) — the
-        # same persist-the-branch-point discipline as plans.crawl /
-        # bench._scheduled_plan, or the micro-batch's candidate chain is
-        # re-executed per read (r6; guide §5).
-        tagged = FR.tag_seen(gated, frontier).persist()
+        tagged, handles = FR.admission_round(
+            FR.robots_gate(batch, robots), frontier, cap)
         try:
-            admitted = FR.admit_with_cap(tagged, frontier, cap).filter("admitted")
-            new_rows = admitted.select(
+            new_rows = tagged.filter("admitted").select(
                 "url_canon", "url_hash", "host", "is_root", "score",
                 F.lit("PENDING").alias("status"),
                 F.lit(int(batch_id)).cast("int").alias("round_added"),
@@ -101,7 +97,8 @@ def run_frontier_ingest(
                 frontier.unionByName(new_rows), meta={"stream_batch": batch_id}
             )
         finally:
-            tagged.unpersist()
+            for h in handles:
+                h.unpersist()
 
     writer = (
         candidate_stream(spark, drop_dir)

@@ -78,7 +78,6 @@ def _cfg(**kw):
     kw.setdefault("max_urls_per_host", 20)
     kw.setdefault("max_rounds", 12)
     kw.setdefault("default_budget", 2)
-    kw.setdefault("use_bloom", False)
     return EngineConfig(**kw)
 
 

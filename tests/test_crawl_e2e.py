@@ -38,9 +38,9 @@ def oracle_result(corpus):
 
 def _engine_cfg(**kw):
     # bloom_min_frontier_rows=0 pins the bloom path ON at test scale (the
-    # adaptive default would skip it below 50M frontier rows), so the e2e
-    # keeps exercising probe + delta-update + rebuild; use_bloom=False
-    # cases cover the adaptive skip's exact-join-only shape
+    # adaptive default would skip it below 500M frontier rows), so the e2e
+    # keeps exercising probe + delta-update + rebuild; cases passing the
+    # default floor cover the adaptive skip's exact-join-only shape
     kw.setdefault("bloom_min_frontier_rows", 0)
     kw.setdefault("keywords", KEYWORDS)
     kw.setdefault("max_urls_per_host", 10)
@@ -100,13 +100,15 @@ def test_engine_matches_oracle(spark, corpus, oracle_result, tmp_path):
 
 
 def test_bloom_fastpath_equals_exact(spark, corpus, oracle_result, tmp_path):
-    """With the bloom prefilter disabled the engine must produce the exact
-    same outputs — the filter is a physical optimization only."""
+    """At the default bloom floor the test-scale crawl runs the plain arm
+    and must produce the exact same outputs — the filter is a physical
+    optimization only."""
     d, manifest = corpus
     job = _run_engine(
         spark, d, manifest["seeds"], tmp_path / "ckpt_nobloom",
-        _engine_cfg(use_bloom=False),
+        _engine_cfg(bloom_min_frontier_rows=EngineConfig.bloom_min_frontier_rows),
     )
+    assert job.seen_arm == "plain"
     assert _log_tuples(job) == oracle_result.crawl_log
 
 
@@ -594,3 +596,35 @@ def test_retry_backoff_refetches_failed_urls(spark, corpus, tmp_path):
     # determinism
     job2 = _run_engine(spark, d, seeds, tmp_path / "ckpt_rt2", cfg)
     assert _log_tuples(job) == _log_tuples(job2)
+
+
+@pytest.mark.parametrize("arm_cfg", [
+    {},
+    {"seen_invert_min_frontier_rows": 0},
+    {"bloom_min_frontier_rows": 0},
+    {"apportion_total": 5},
+], ids=["plain", "invert", "bloom", "apportion_total"])
+def test_run_round_leaves_no_persisted_rdds(spark, tmp_path, arm_cfg):
+    """Every persist and localCheckpoint a round makes (admission
+    branch points, crawl-order and apportionment checkpoints, filter
+    updates) is released by the time bootstrap / run_round return, so a
+    long-lived session does not accumulate cached blocks."""
+    d = str(tmp_path / "c")
+    m = generate_corpus(d, CorpusConfig(n_hosts=2, pages_per_host=6,
+                                        hot_host_pages=6))
+    sc = spark.sparkContext
+    # start from an empty cache: release what earlier tests left behind
+    spark.catalog.clearCache()
+    for rdd in list(sc._jsc.getPersistentRDDs().values()):
+        rdd.unpersist()
+    cfg = EngineConfig(keywords=KEYWORDS, max_urls_per_host=8,
+                       default_budget=3, **arm_cfg)
+    job = CrawlJob(spark, d, str(tmp_path / "ck"), cfg, m["seeds"])
+    job.bootstrap()
+    assert sc._jsc.getPersistentRDDs().size() == 0
+    for r in range(1, cfg.max_rounds + 1):
+        out = job.run_round(r)
+        assert sc._jsc.getPersistentRDDs().size() == 0, r
+        if out["scheduled"] == 0:
+            break
+    assert r > 1

@@ -1,16 +1,12 @@
-"""Bloom/cuckoo filter units + the amortized SeenFilterState contract."""
+"""Bloom/cuckoo filter units + the crawl loop's seen-arm choice and
+filter-table rebuild guards (the filter state lives in the bucketed
+`t_filters` table's manifest meta)."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from smartcrawler_spark.operators.filters import (
-    CUCKOO_SATURATED,
-    BloomFilter,
-    CuckooFilter,
-    SeenFilterState,
-)
+from smartcrawler_spark.operators.filters import BloomFilter, CuckooFilter
 
 
 def test_bloom_no_false_negatives_and_fpr():
@@ -35,67 +31,6 @@ def test_cuckoo_add_contains_delete():
     assert not cf.contains_many(keys[:1])[0]
     cf2 = CuckooFilter.from_bytes(cf.to_bytes())
     assert cf2.contains_many(keys[1:]).all()
-
-
-def test_cuckoo_saturation_degrades_bucket_not_membership(tmp_path):
-    """A cuckoo bucket that cannot absorb ALL its keys must answer
-    maybe_seen=True for EVERYTHING (a key absent from both filters is a
-    false negative: the bloom fast path would re-admit a seen URL without
-    the exact join). Saturation marks the bucket CUCKOO_SATURATED."""
-    rng = np.random.default_rng(3)
-    st = SeenFilterState(n_buckets=1, rebuild_every=100, cuckoo_capacity=64)
-    # force overflow: way more keys than the tiny capacity can hold
-    keys = rng.integers(-2**63, 2**63 - 1, 2000, dtype=np.int64).tolist()
-    inserted = st.add_delta(keys)
-    assert inserted < len(keys)  # genuinely overflowed
-    assert st.cuckoos[0] == CUCKOO_SATURATED
-    # EVERY key — inserted, dropped, or never seen — now reads maybe-seen
-    other = rng.integers(-2**63, 2**63 - 1, 50, dtype=np.int64).tolist()
-    assert st.contains_delta(keys).all()
-    assert st.contains_delta(other).all()
-    # degraded bucket forces an early rebuild
-    assert st.needs_rebuild()
-    # further adds/removes keep it degraded (contents unknown)
-    st.add_delta(other)
-    assert st.cuckoos[0] == CUCKOO_SATURATED
-    st.remove_delta(keys[:5])
-    assert st.cuckoos[0] == CUCKOO_SATURATED
-    # persistence keeps the marker
-    p = str(tmp_path / "sat.pkl")
-    st.save(p)
-    st2 = SeenFilterState.load(p)
-    assert st2.cuckoos[0] == CUCKOO_SATURATED and st2.needs_rebuild()
-    # rebuild clears it
-    st.rebuilt({0: BloomFilter(4096).to_bytes()})
-    assert st.cuckoos == {} and not st.needs_rebuild()
-
-
-def test_seen_filter_state_amortization(tmp_path):
-    st = SeenFilterState(n_buckets=4, rebuild_every=3, cuckoo_capacity=4096)
-    assert st.needs_rebuild()  # never built
-    st.rebuilt({0: BloomFilter(64).to_bytes()})
-    assert not st.needs_rebuild()
-    # three rounds of deltas -> due for rebuild on the fourth
-    for r in range(3):
-        st.add_delta([100 + r, 200 + r])
-    assert st.needs_rebuild()
-    # delta keys are queryable until then
-    assert st.contains_delta([100, 201]).all()
-    # rollback support (the bloom can't do this)
-    assert st.remove_delta([100]) == 1
-    assert not st.contains_delta([100])[0]
-
-    # persistence round-trip
-    p = str(tmp_path / "filters" / "state.pkl")
-    st.save(p)
-    st2 = SeenFilterState.load(p)
-    assert st2 is not None
-    assert st2.rounds_since_rebuild == st.rounds_since_rebuild
-    assert st2.contains_delta([101, 202]).all()
-    # corrupt file degrades to None (caller rebuilds)
-    with open(p, "wb") as f:
-        f.write(b"garbage")
-    assert SeenFilterState.load(p) is None
 
 
 def test_crawl_reuses_blooms_across_rounds(spark, tmp_path):
@@ -125,37 +60,6 @@ def test_crawl_reuses_blooms_across_rounds(spark, tmp_path):
     assert got == want.crawl_log
 
 
-def test_executor_bucket_cuckoo_update_matches_driver_path(spark):
-    """update_bucket_cuckoos (applyInPandas per bucket, blobs-only to the
-    driver) must produce the same delta membership as the driver-side
-    add_delta over the same keys — including keys spread across buckets,
-    negative hashes, and incremental updates on top of existing blobs."""
-    import random
-
-    from smartcrawler_spark.operators.filters import SeenFilterState
-    from smartcrawler_spark.operators.frontier import update_bucket_cuckoos
-
-    rng = random.Random(7)
-    keys1 = [rng.randrange(-2**63, 2**63) for _ in range(500)]
-    keys2 = [rng.randrange(-2**63, 2**63) for _ in range(300)]
-    absent = [rng.randrange(-2**63, 2**63) for _ in range(200)]
-
-    st_exec = SeenFilterState(n_buckets=8, cuckoo_capacity=4096)
-    st_driver = SeenFilterState(n_buckets=8, cuckoo_capacity=4096)
-    for batch in (keys1, keys2):  # second batch updates existing blobs
-        df = spark.createDataFrame([(k,) for k in batch], "url_hash long")
-        st_exec.absorb_bucket_blobs(
-            update_bucket_cuckoos(spark, df, st_exec.cuckoos, 8, 4096)
-        )
-        st_driver.add_delta(batch)
-
-    allk = keys1 + keys2
-    assert st_exec.contains_delta(allk).all()
-    assert (st_exec.contains_delta(absent)
-            == st_driver.contains_delta(absent)).all()
-    assert st_exec.rounds_since_rebuild == st_driver.rounds_since_rebuild
-
-
 def test_adaptive_bloom_skips_probe_below_floor(spark, tmp_path):
     """With the default bloom_min_frontier_rows floor (measured crossover:
     bench_runs/bloom_compare_r03.json) a small crawl must run exact-join-
@@ -172,13 +76,13 @@ def test_adaptive_bloom_skips_probe_below_floor(spark, tmp_path):
                         EngineConfig(**kw), m["seeds"])
     adaptive.run()
     assert adaptive.t_filters.latest_version() is None  # never probed
-    assert adaptive._bloom_active is False
+    assert adaptive.seen_arm == "plain"
 
     forced = CrawlJob(spark, d, str(tmp_path / "f"),
                       EngineConfig(bloom_min_frontier_rows=0, **kw), m["seeds"])
     forced.run()
     assert forced.t_filters.latest_version() is not None
-    assert forced._bloom_active is True
+    assert forced.seen_arm == "bloom"
 
     a = [(r["round"], r["seq"], r["url_canon"])
          for r in adaptive.crawl_log().orderBy("round", "seq").collect()]
@@ -205,11 +109,85 @@ def test_invert_seen_join_crawl_matches_oracle(spark, tmp_path):
                        seen_invert_min_frontier_rows=0)
     job = CrawlJob(spark, d, str(tmp_path / "ck"), cfg, m["seeds"])
     job.run()
-    assert job._invert_active is True
-    assert job._bloom_active is False
+    assert job.seen_arm == "invert"
     assert job.t_filters.latest_version() is None  # bloom never engaged
     want = crawl(d, m["seeds"], CrawlConfig(keywords={"news": 1.0},
                                             max_urls_per_host=8, default_budget=3))
     got = [(r["round"], r["seq"], r["url_canon"])
            for r in job.crawl_log().orderBy("round", "seq").collect()]
     assert got == want.crawl_log
+
+
+# keywords / cap / budget shared by the engine and the oracle below; a
+# budget of 2 stretches the crawl over enough rounds for a mid-crawl gap
+_KW = dict(keywords={"news": 1.0}, max_urls_per_host=40, default_budget=2)
+
+
+def _corpus_and_oracle(tmp_path):
+    from smartcrawler_spark.oracle import CrawlConfig, crawl
+    from smartcrawler_spark.sources.corpus import CorpusConfig, generate_corpus
+
+    d = str(tmp_path / "c")
+    m = generate_corpus(d, CorpusConfig(n_hosts=3, pages_per_host=16,
+                                        hot_host_pages=16))
+    return d, m["seeds"], crawl(d, m["seeds"], CrawlConfig(**_KW)).crawl_log
+
+
+def _log(job):
+    return [(r["round"], r["seq"], r["url_canon"])
+            for r in job.crawl_log().orderBy("round", "seq").collect()]
+
+
+def _filter_metas(job):
+    t = job.t_filters
+    return [t.manifest(v)["meta"] for v in t.versions()]
+
+
+def test_saturated_cuckoo_forces_rebuild_next_round(spark, tmp_path):
+    """A bloom-pinned crawl whose one cuckoo bucket overflows (capacity
+    far below the admitted count) marks the filter table degraded; the
+    very next round must rebuild the blooms — rounds_since_rebuild back to
+    0, filters_degraded cleared — and the crawl still equals the oracle."""
+    from smartcrawler_spark.plans.crawl import CrawlJob, EngineConfig
+
+    d, seeds, want = _corpus_and_oracle(tmp_path)
+    cfg = EngineConfig(bloom_min_frontier_rows=0, bloom_buckets=1,
+                       cuckoo_capacity=1, bloom_rebuild_every=100, **_KW)
+    job = CrawlJob(spark, d, str(tmp_path / "ck"), cfg, seeds)
+    job.run()
+    metas = _filter_metas(job)
+    degraded = [i for i, m in enumerate(metas[:-1]) if m.get("filters_degraded")]
+    assert degraded  # the tiny delta really overflowed mid-crawl
+    for i in degraded:
+        assert metas[i + 1] == {"rounds_since_rebuild": 0,
+                                "round": metas[i]["round"] + 1}
+    assert _log(job) == want
+
+
+def test_stale_filter_table_rebuilds_after_bloom_off_round(spark, tmp_path):
+    """Stale gap: rounds 0-2 run the bloom arm, round 3 resumes the same
+    checkpoint at the default floor (plain arm, so its admissions never
+    reach the blobs), then the crawl resumes with the bloom arm again.
+    Round 4 must rebuild the filter table even though rounds_since_rebuild
+    is far below bloom_rebuild_every, and the crawl equals the oracle."""
+    from smartcrawler_spark.plans.crawl import CrawlJob, EngineConfig
+
+    d, seeds, want = _corpus_and_oracle(tmp_path)
+    ck = str(tmp_path / "ck")
+    bloom = EngineConfig(bloom_min_frontier_rows=0, bloom_rebuild_every=100, **_KW)
+
+    job = CrawlJob(spark, d, ck, bloom, seeds)
+    job.bootstrap()
+    job.run_round(1)
+    job.run_round(2)
+    job = CrawlJob(spark, d, ck, EngineConfig(**_KW), seeds)
+    assert job.bootstrap() == 2
+    assert job.run_round(3)["scheduled"] > 0
+    assert job.seen_arm == "plain"
+    n_before = len(job.t_filters.versions())
+    job = CrawlJob(spark, d, ck, bloom, seeds)
+    job.run()
+    metas = _filter_metas(job)
+    assert metas[n_before - 1]["round"] == 2  # round 3 left the table alone
+    assert metas[n_before] == {"rounds_since_rebuild": 0, "round": 4}
+    assert _log(job) == want

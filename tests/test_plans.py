@@ -97,24 +97,42 @@ def test_groupby_has_partial_aggregation(spark, sf_dir):
     assert "Exchange" in plan and "hashpartitioning" in plan
 
 
-def test_round_branch_points_are_persisted(spark, sf_dir):
-    """Regression guard for the 4x-recompute fix: tag_seen and
-    admit_with_cap read their inputs twice, so the bench/crawl round must
-    persist the branch points — the second read must hit an
-    InMemoryRelation, not re-run the candidate chain."""
+@pytest.mark.parametrize("arm", ["plain", "invert", "bloom"])
+def test_round_branch_points_are_persisted(spark, sf_dir, arm):
+    """Regression guard for the 4x-recompute fix: admission_round persists
+    exactly the DataFrames it reads twice (the gated batch on the invert
+    and bloom arms, the probe output on the bloom arm, the tag_seen output
+    always), so every second read hits an InMemoryTableScan instead of
+    re-running the candidate chain — and releasing the handles it returns
+    leaves the session's persisted RDDs as they were."""
     import bench
+    from smartcrawler_spark.operators import frontier as FR
 
     raw = bench.build_frontier_workload(spark, sf_dir, 1).limit(20_000)
     seen = bench._build_seen(raw)
-    robots, budgets, cap = bench._round_dims(spark, 1)
-    scheduled, handles = bench._scheduled_plan(spark, raw, seen, robots, budgets, cap)
+    robots, _, cap = bench._round_dims(spark, 1)
+    gated = FR.robots_gate(FR.with_url_columns_deduped(raw, "url", {}), robots)
+    filters = FR.build_bucket_blooms_df(seen, 8) if arm == "bloom" else None
+    def persisted() -> set[int]:
+        # ids, not a count: the context cleaner may drop other tests' RDDs
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    tagged, handles = FR.admission_round(
+        gated, seen, cap, invert=arm == "invert", filters=filters, n_buckets=8)
     try:
-        assert len(handles) == 2
+        assert len(handles) == {"plain": 1, "invert": 2, "bloom": 3}[arm]
         assert all(h.storageLevel.useMemory for h in handles)
-        assert "InMemoryTableScan" in plan_of(scheduled)
+        scans = spark._jvm.PythonSQLUtils.explainString(
+            tagged._jdf.queryExecution(), "simple").count("InMemoryTableScan")
+        assert scans >= 2 * len(handles)  # each handle is read twice
+        tagged.count()
+        new = persisted() - before
+        assert len(new) == len(handles)
     finally:
         for h in handles:
             h.unpersist()
+    assert not persisted() & new
 
 
 def test_host_sharded_admission_equals_unsharded(spark, sf_dir):
@@ -130,7 +148,7 @@ def test_host_sharded_admission_equals_unsharded(spark, sf_dir):
 
     def run(raw_part, seen_part):
         scheduled, handles = bench._scheduled_plan(
-            spark, raw_part, seen_part, robots, budgets, cap
+            raw_part, seen_part, robots, budgets, cap
         )
         rows = {(r["host"], r["url_canon"]) for r in scheduled.collect()}
         for h in handles:

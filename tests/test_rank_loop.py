@@ -33,7 +33,6 @@ def _cfg(**kw):
     kw.setdefault("max_urls_per_host", 10)
     kw.setdefault("max_rounds", 8)
     kw.setdefault("default_budget", 4)
-    kw.setdefault("use_bloom", False)
     return EngineConfig(**kw)
 
 

@@ -72,7 +72,6 @@ def _cfg(**kw):
     kw.setdefault("max_urls_per_host", 50)
     kw.setdefault("max_rounds", 10)
     kw.setdefault("default_budget", 4)
-    kw.setdefault("use_bloom", False)
     return EngineConfig(**kw)
 
 
