@@ -53,7 +53,7 @@ def main() -> int:
     ap.add_argument("--retry-max-per-round", type=int, default=None,
                     help="cap retry candidates per round")
     ap.add_argument("--bloom-min-frontier-rows", type=int, default=None,
-                    help="adaptive seen-prefilter floor (default 50M; "
+                    help="adaptive seen-prefilter floor (default 500M; "
                          "0 forces the bloom path on)")
     ap.add_argument("--anchor-keywords", default=None,
                     help="integer keyword weights (JSON) for the "

@@ -10,8 +10,8 @@ The freshness loop a crawl fleet runs between crawls:
       -> (key, rate_ppm, interval)   parquet dim
 
 The output is the artifact `jobs/run_crawl.py --refresh-intervals`
-consumes (plans.crawl wires it through operators.frontier.
-refresh_due_adaptive): hosts whose content moved often get short
+consumes (plans.crawl passes it to operators.frontier.refresh_due as
+its `intervals` dim): hosts whose content moved often get short
 revisit intervals, static hosts long ones.
 
 Usage:

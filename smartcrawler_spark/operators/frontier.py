@@ -48,39 +48,39 @@ from .filters import CUCKOO_SATURATED, BloomFilter
 # ---------------------------------------------------------------------------
 
 
-def with_url_columns(df: DataFrame, url_col: str, keywords: dict[str, float],
-                     score_impl: str | None = None) -> DataFrame:
-    """url -> (url_canon, url_hash, host, is_root, score), dropping the raw col.
-
-    score_impl: 'jvm' (default since r6 — measured ~2-3 s/round at 30M
-    URLs over the Arrow path once GC headroom is right; zero Python in
-    the round, the 100 TB hot path) uses the whole-stage-codegen column
-    expression; 'arrow' scores with the vectorized pandas UDF — the
-    surface the north star names, kernel shared with the pure-Python
-    oracle. Both are proven equal in tests/test_relevance.py; override
-    globally with SPARK_GRAFT_SCORE_IMPL=arrow."""
+def _derive_url_columns(df: DataFrame, keywords: dict[str, float],
+                        score_impl: str | None) -> DataFrame:
+    """url_canon -> + (url_hash, host, is_root, score): every derived column
+    is a pure function of url_canon. score_impl: 'jvm' (default since r6 —
+    measured ~2-3 s/round at 30M URLs over the Arrow path once GC headroom
+    is right; zero Python in the round, the 100 TB hot path) uses the
+    whole-stage-codegen column expression; 'arrow' scores with the
+    vectorized pandas UDF — the surface the north star names, kernel shared
+    with the pure-Python oracle. Both are proven equal in
+    tests/test_relevance.py; override globally with
+    SPARK_GRAFT_SCORE_IMPL=arrow."""
     import os
 
     from ..functions.relevance import relevance_score_expr
 
     impl = score_impl or os.environ.get("SPARK_GRAFT_SCORE_IMPL", "jvm")
-    canon = U.canonicalize_url(F.col(url_col))
+    canon = F.col("url_canon")
     out = (
-        df.withColumn("url_canon", canon)
-        .withColumn("url_hash", U.url_hash(F.col("url_canon")))
-        .withColumn("host", U.url_host(F.col("url_canon")))
-        .withColumn("is_root", U.is_root_url(F.col("url_canon")))
+        df.withColumn("url_hash", U.url_hash(canon))
+        .withColumn("host", U.url_host(canon))
+        .withColumn("is_root", U.is_root_url(canon))
     )
     if impl == "jvm":
-        out = out.withColumn("score", relevance_score_expr(F.col("url_canon"), keywords))
-    else:
-        out = out.withColumn("score", relevance_score_udf(keywords)(F.col("url_canon")))
-    return out.drop(url_col)
+        return out.withColumn("score", relevance_score_expr(canon, keywords))
+    return out.withColumn("score", relevance_score_udf(keywords)(canon))
 
 
-# ---------------------------------------------------------------------------
-# robots gating (J5)
-# ---------------------------------------------------------------------------
+def with_url_columns(df: DataFrame, url_col: str, keywords: dict[str, float],
+                     score_impl: str | None = None) -> DataFrame:
+    """url -> (url_canon, url_hash, host, is_root, score), dropping the raw
+    col. score_impl as in _derive_url_columns."""
+    canon = df.withColumn("url_canon", U.canonicalize_url(F.col(url_col)))
+    return _derive_url_columns(canon, keywords, score_impl).drop(url_col)
 
 
 def with_url_columns_deduped(df: DataFrame, url_col: str,
@@ -94,11 +94,6 @@ def with_url_columns_deduped(df: DataFrame, url_col: str,
     columns are pure functions of url_canon), but the exchange writes one
     column instead of five and the scoring kernel runs on distinct URLs
     only — measured ~8% on the full admission round at 3M URLs."""
-    import os
-
-    from ..functions.relevance import relevance_score_expr
-
-    impl = score_impl or os.environ.get("SPARK_GRAFT_SCORE_IMPL", "jvm")
     # NB (r6, measured): deduping on (url_hash, url_canon) instead — so the
     # exchange partitioning could be reused by the downstream seen join —
     # was tried and REVERTED: the 8-byte random hash added ~270 MB of
@@ -108,16 +103,12 @@ def with_url_columns_deduped(df: DataFrame, url_col: str,
         df.select(U.canonicalize_url(F.col(url_col)).alias("url_canon"))
         .dropDuplicates(["url_canon"])
     )
-    out = (
-        canon.withColumn("url_hash", U.url_hash(F.col("url_canon")))
-        .withColumn("host", U.url_host(F.col("url_canon")))
-        .withColumn("is_root", U.is_root_url(F.col("url_canon")))
-    )
-    if impl == "jvm":
-        return out.withColumn(
-            "score", relevance_score_expr(F.col("url_canon"), keywords))
-    return out.withColumn(
-        "score", relevance_score_udf(keywords)(F.col("url_canon")))
+    return _derive_url_columns(canon, keywords, score_impl)
+
+
+# ---------------------------------------------------------------------------
+# robots gating (J5)
+# ---------------------------------------------------------------------------
 
 
 def robots_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
@@ -370,7 +361,7 @@ def seen_anti_join(candidates: DataFrame, frontier: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# per-host admission cap (A6) — reference max_urls_per_domain
+# ranking kernels: per-group top-k (A6/A7) and the range-partitioned rank
 # ---------------------------------------------------------------------------
 
 def _order() -> list[Column]:
@@ -378,6 +369,99 @@ def _order() -> list[Column]:
     and the crawl_log sequence): is_root desc, score desc, url_canon asc."""
     return [F.col("is_root").desc(), F.col("score").desc(), F.col("url_canon").asc()]
 
+
+def top_k_per_group(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[Column],
+    k: int | str,
+    n_salts: int = 8,
+    salt_on: str | None = None,
+) -> DataFrame:
+    """THE skew-safe per-group top-k — per-host admission room, politeness
+    budgets, per-stratum sample quotas and the capped recrawl/retry
+    selectors all rank through it. Phase 1 ranks within (group, salt) —
+    bounding any single task to |group|/n_salts rows — and keeps each
+    salt's local top-k; phase 2 re-ranks the <= n_salts*k survivors per
+    group. Output identical to a single window.
+
+    `k` is an int, or the name of a column whose per-row value is the
+    limit (constant within a group: a per-host budget or room); rows with
+    a limit <= 0 are dropped. The limit column is left on the output."""
+    limit = F.col(k) if isinstance(k, str) else k
+    salt_src = salt_on or group_cols[-1]
+    salted = df.withColumn(
+        "_salt", F.pmod(F.xxhash64(salt_src), F.lit(n_salts))
+    )
+    w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_cols)
+    phase1 = salted.withColumn("_rn1", F.row_number().over(w1)).filter(
+        F.col("_rn1") <= limit
+    )
+    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
+    return (
+        phase1.withColumn("_rn2", F.row_number().over(w2))
+        .filter(F.col("_rn2") <= limit)
+        .drop("_salt", "_rn1", "_rn2")
+    )
+
+
+def _most_overdue(due: DataFrame, overdue_col: str,
+                  max_per_round: int | None) -> DataFrame:
+    """Cap a recrawl/retry selection at `max_per_round` rows, most overdue
+    first (then the pinned order), through top_k_per_group over one group."""
+    if max_per_round is None:
+        return due
+    return top_k_per_group(
+        due.withColumn("_g", F.lit(1)),
+        ["_g"],
+        [F.col(overdue_col).desc(), *_order()],
+        max_per_round,
+        salt_on="url_canon",
+    ).drop("_g")
+
+
+def _range_rank(df: DataFrame, order: list[Column],
+                n_partitions: int | None) -> tuple[DataFrame, Column]:
+    """THE global rank of `df` under a strict total `order`, with no
+    SinglePartition stage: rows are RANGE-partitioned on the order, each
+    range partition ranks its own slice in parallel (the window's partition
+    key is the range-partition id), and the global rank is local rank + the
+    sum of earlier partitions' counts (one tiny n_partitions-row collect).
+    Because the order is strict, the result equals a single global
+    row_number wherever the range boundaries fall.
+
+    Returns (parts, rank): select `rank` (1-based) from `parts`. `parts` is
+    localCheckpointed — counts and ranks must come from the SAME
+    materialized partitioning (a lazy recompute could resample different
+    range boundaries between the count pass and the rank pass) — so the
+    caller frees it with release_checkpoints(result) after its last action."""
+    n = n_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    parts = (
+        df.repartitionByRange(n, *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+    cnts = {r["_pid"]: r["n"]
+            for r in parts.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
+    offsets: dict[int, int] = {}
+    acc = 0
+    for pid in sorted(cnts):
+        offsets[pid] = acc
+        acc += cnts[pid]
+    if cnts:
+        off_map = F.create_map(
+            *[x for pid in sorted(cnts) for x in (F.lit(pid), F.lit(offsets[pid]))]
+        )
+        offset = F.coalesce(off_map[F.col("_pid")], F.lit(0))
+    else:
+        offset = F.lit(0)  # empty input: typed map() literal won't resolve
+    rank = F.row_number().over(Window.partitionBy("_pid").orderBy(*order))
+    return parts, rank + offset
+
+
+# ---------------------------------------------------------------------------
+# per-host admission cap (A6) — reference max_urls_per_domain
+# ---------------------------------------------------------------------------
 
 def admit_with_cap(
     tagged: DataFrame, frontier: DataFrame, cap: int, n_salts: int = 8
@@ -387,10 +471,9 @@ def admit_with_cap(
     <= cap - existing_host_count. Deterministic total order => identical to
     the oracle's sequential insert loop.
 
-    Skew-safe TWO-PHASE ranking (same trick as politeness_topk): a hot host
-    with millions of candidates would otherwise rank in ONE window task and
-    serialize the whole round. Phase 1 keeps each (host, salt)'s local
-    top-room; phase 2 exactly re-ranks the <= n_salts*room survivors; the
+    Skew-safe ranking through top_k_per_group with the per-host room as
+    the limit column: a hot host with millions of candidates would
+    otherwise rank in ONE window task and serialize the whole round. The
     winners' keys join back onto the full tagged set (so every candidate
     keeps its fate tag for metrics).
 
@@ -425,17 +508,9 @@ def admit_with_cap(
     # join-back re-attaches them by key
     elig = tagged.filter(F.col("eligible") & (F.col("_room") > 0)).select(
         "url_hash", "url_canon", "host", "is_root", "score", "_room")
-    salted = elig.withColumn("_salt", F.pmod(F.xxhash64("url_canon"), F.lit(n_salts)))
-    w1 = Window.partitionBy("host", "_salt").orderBy(*_order())
-    p1 = salted.withColumn("_rn1", F.row_number().over(w1)).filter(
-        F.col("_rn1") <= F.col("_room")
-    )
-    w2 = Window.partitionBy("host").orderBy(*_order())
-    winners = (
-        p1.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= F.col("_room"))
-        .select("url_hash", "url_canon", F.lit(True).alias("_win"))
-    )
+    winners = top_k_per_group(
+        elig, ["host"], _order(), "_room", n_salts, salt_on="url_canon"
+    ).select("url_hash", "url_canon", F.lit(True).alias("_win"))
     return (
         tagged.join(winners, ["url_hash", "url_canon"], "left")
         .withColumn("admitted", F.coalesce(F.col("_win"), F.lit(False)))
@@ -486,37 +561,8 @@ def admission_round(
 
 
 # ---------------------------------------------------------------------------
-# politeness-budget priority queue (A7) — two-phase salted top-k
+# politeness-budget priority queue (A7)
 # ---------------------------------------------------------------------------
-
-def top_k_per_group(
-    df: DataFrame,
-    group_cols: list[str],
-    order_cols: list[Column],
-    k: int,
-    n_salts: int = 8,
-    salt_on: str | None = None,
-) -> DataFrame:
-    """Generic skew-safe per-group top-k: the same two-phase salted window
-    politeness uses, for any (group, order, k). Phase 1 ranks within
-    (group, salt) — bounding any single task to |group|/n_salts rows — and
-    keeps each salt's local top-k; phase 2 re-ranks the <= n_salts*k
-    survivors per group. Output identical to a single window."""
-    salt_src = salt_on or group_cols[-1]
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(salt_src), F.lit(n_salts))
-    )
-    w1 = Window.partitionBy(*group_cols, "_salt").orderBy(*order_cols)
-    phase1 = salted.withColumn("_rn1", F.row_number().over(w1)).filter(
-        F.col("_rn1") <= k
-    )
-    w2 = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        phase1.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= k)
-        .drop("_salt", "_rn1", "_rn2")
-    )
-
 
 def politeness_topk(
     pending: DataFrame,
@@ -524,30 +570,16 @@ def politeness_topk(
     default_budget: int,
     n_salts: int = 8,
 ) -> DataFrame:
-    """Per-host top-budget by (is_root desc, score desc, url_canon asc).
-
-    Two-phase: phase 1 ranks within (host, salt) — at most 1/n_salts of a
-    hot host per task — and keeps each salt's local top-budget; phase 2
-    re-ranks the survivors (<= n_salts * budget rows per host) for the exact
-    global per-host top-budget. Identical output to a single window, but no
-    single task ever sees a whole hot host. budgets(host, budget)."""
+    """Per-host top-budget by (is_root desc, score desc, url_canon asc):
+    top_k_per_group with the host's budget as the limit column, so no
+    single task ever sees a whole hot host. budgets(host, budget); hosts
+    without a row get `default_budget`."""
     with_budget = pending.join(F.broadcast(budgets), "host", "left").withColumn(
         "_budget", F.coalesce(F.col("budget"), F.lit(default_budget))
     ).drop("budget")
-
-    salted = with_budget.withColumn(
-        "_salt", F.pmod(F.xxhash64("url_canon"), F.lit(n_salts))
-    )
-    w1 = Window.partitionBy("host", "_salt").orderBy(*_order())
-    phase1 = salted.withColumn("_rn1", F.row_number().over(w1)).filter(
-        F.col("_rn1") <= F.col("_budget")
-    )
-    w2 = Window.partitionBy("host").orderBy(*_order())
-    return (
-        phase1.withColumn("_rn2", F.row_number().over(w2))
-        .filter(F.col("_rn2") <= F.col("_budget"))
-        .drop("_salt", "_rn1", "_rn2", "_budget")
-    )
+    return top_k_per_group(
+        with_budget, ["host"], _order(), "_budget", n_salts, salt_on="url_canon"
+    ).drop("_budget")
 
 
 def adaptive_budgets(frontier: DataFrame, budgets: DataFrame,
@@ -597,13 +629,21 @@ def adaptive_budgets(frontier: DataFrame, budgets: DataFrame,
     return joined.select("host", budget.alias("budget"))
 
 
-def refresh_due(frontier: DataFrame, round_no: int, interval: int,
+def refresh_due(frontier: DataFrame, round_no: int, interval: int, *,
+                intervals: DataFrame | None = None,
                 statuses: tuple[str, ...] = ("SUCCESS",),
                 max_per_round: int | None = None) -> DataFrame:
     """Freshness/recrawl scheduling: frontier rows whose last fetch is at
     least `interval` rounds old become refresh candidates again, stalest
     first (the standard revisit policy; pair with sitemap <lastmod> by
     shrinking `interval` for hosts that publish recent lastmods).
+
+    `intervals` switches to a PER-HOST interval: a (key, interval) dim from
+    `plans.analysis.recrawl_intervals` — hosts whose content was observed
+    to change often get short revisit intervals, static hosts long ones
+    (the adaptive revisit policy; Cho & Garcia-Molina 2003 uniform
+    allocation over estimated change rates). Hosts with no estimate yet
+    fall back to `interval`.
 
     Emits (url_canon, url_hash, host, is_root, score, rounds_stale) ordered
     by the engine's pinned total order within equal staleness. With
@@ -612,26 +652,24 @@ def refresh_due(frontier: DataFrame, round_no: int, interval: int,
 
     Scale shape: a filter + projection over the bucketed frontier —
     predicate pushdown reaches the parquet scan (status + round_fetched
-    are plain columns), no shuffle unless the cap ranks."""
+    are plain columns); the interval dim is host-cardinality (tiny vs the
+    frontier) and is broadcast-joined. No shuffle unless the cap ranks."""
     stale = F.lit(round_no) - F.col("round_fetched")
-    due = (
-        frontier.filter(
-            F.col("status").isin(list(statuses))
-            & F.col("round_fetched").isNotNull()
-            & (stale >= interval)
+    fetched = F.col("status").isin(list(statuses)) & F.col("round_fetched").isNotNull()
+    if intervals is None:
+        due = frontier.filter(fetched & (stale >= interval))
+    else:
+        iv = intervals.select(
+            F.col("key").alias("host"), F.col("interval").alias("_iv")
         )
-        .select("url_canon", "url_hash", "host", "is_root", "score",
-                stale.cast("int").alias("rounds_stale"))
-    )
-    if max_per_round is None:
-        return due
-    return top_k_per_group(
-        due.withColumn("_g", F.lit(1)),
-        ["_g"],
-        [F.col("rounds_stale").desc(), *_order()],
-        max_per_round,
-        salt_on="url_canon",
-    ).drop("_g")
+        due = (
+            frontier.filter(fetched)
+            .join(F.broadcast(iv), "host", "left")
+            .filter(stale >= F.coalesce(F.col("_iv"), F.lit(interval)))
+        )
+    due = due.select("url_canon", "url_hash", "host", "is_root", "score",
+                     stale.cast("int").alias("rounds_stale"))
+    return _most_overdue(due, "rounds_stale", max_per_round)
 
 
 def revalidate_pending(frontier: DataFrame, robots: DataFrame | None = None,
@@ -694,15 +732,7 @@ def retry_due(frontier: DataFrame, attempts: DataFrame, round_no: int,
                 F.col("n_attempts").cast("int").alias("n_attempts"),
                 waited.cast("int").alias("rounds_waited"))
     )
-    if max_per_round is None:
-        return due
-    return top_k_per_group(
-        due.withColumn("_g", F.lit(1)),
-        ["_g"],
-        [F.col("rounds_waited").desc(), *_order()],
-        max_per_round,
-        salt_on="url_canon",
-    ).drop("_g")
+    return _most_overdue(due, "rounds_waited", max_per_round)
 
 
 def attempts_from_log(crawl_log: DataFrame) -> DataFrame:
@@ -743,94 +773,22 @@ def assign_shards(hosts: DataFrame, n_shards: int, key_col: str = "host",
     )
 
 
-def refresh_due_adaptive(frontier: DataFrame, round_no: int,
-                         intervals: DataFrame, default_interval: int,
-                         statuses: tuple[str, ...] = ("SUCCESS",),
-                         max_per_round: int | None = None) -> DataFrame:
-    """`refresh_due` with a PER-HOST interval dim instead of one global
-    interval: `intervals` is (key, interval) from
-    `plans.analysis.recrawl_intervals` — hosts whose content was observed
-    to change often get short revisit intervals, static hosts long ones
-    (the adaptive revisit policy; Cho & Garcia-Molina 2003 uniform
-    allocation over estimated change rates). Hosts with no estimate yet
-    fall back to `default_interval`.
-
-    Scale shape: the interval dim is host-cardinality (tiny vs the
-    frontier) → broadcast left join, then the same pushdown-reaching
-    staleness filter and optional two-phase top-k cap as `refresh_due`.
-    The frontier is never shuffled unless the cap ranks."""
-    iv = intervals.select(
-        F.col("key").alias("host"), F.col("interval").alias("_iv")
-    )
-    stale = F.lit(round_no) - F.col("round_fetched")
-    due = (
-        frontier.filter(
-            F.col("status").isin(list(statuses))
-            & F.col("round_fetched").isNotNull()
-        )
-        .join(F.broadcast(iv), "host", "left")
-        .filter(stale >= F.coalesce(F.col("_iv"), F.lit(default_interval)))
-        .select("url_canon", "url_hash", "host", "is_root", "score",
-                stale.cast("int").alias("rounds_stale"))
-    )
-    if max_per_round is None:
-        return due
-    return top_k_per_group(
-        due.withColumn("_g", F.lit(1)),
-        ["_g"],
-        [F.col("rounds_stale").desc(), *_order()],
-        max_per_round,
-        salt_on="url_canon",
-    ).drop("_g")
-
-
 def global_crawl_order(scheduled: DataFrame, round_no: int,
                        n_partitions: int | None = None) -> DataFrame:
     """crawl_log rows (round, seq, url_canon): the deterministic total order
     the oracle pins (is_root desc, score desc, url_canon asc).
 
     The contract requires ONE total sequence per round, but no stage here
-    ever sees the whole schedule: the rows are RANGE-partitioned on the
-    pinned order, each range partition ranks its own slice in parallel
-    (the window's partition key is the range-partition id, so no
-    SinglePartition exchange exists anywhere in the plan), and the global
-    seq is local rank + the sum of earlier partitions' counts (one tiny
-    n_partitions-row collect). Because the order is STRICT (url_canon is
-    unique within a schedule), the result is identical to a single global
-    row_number regardless of where the range boundaries fall.
+    ever sees the whole schedule: seq is the range-partitioned global rank
+    (_range_rank) on the pinned order, which is STRICT (url_canon is
+    unique within a schedule).
 
-    The range-partitioned input is localCheckpointed: offsets and ranks
-    must be computed from the SAME materialized partitioning (a lazy
-    recompute could resample different range boundaries between the count
-    pass and the rank pass). The caller frees that materialization with
-    release_checkpoints(result) once its last action on the result ran."""
-    spark = scheduled.sparkSession
-    n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    parts = (
-        scheduled.repartitionByRange(n, *_order())
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    cnts = {
-        r["_pid"]: r["n"]
-        for r in parts.groupBy("_pid").agg(F.count("*").alias("n")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(cnts):
-        offsets[pid] = acc
-        acc += cnts[pid]
-    if cnts:
-        off_map = F.create_map(
-            *[x for pid in sorted(cnts) for x in (F.lit(pid), F.lit(offsets[pid]))]
-        )
-        offset = F.coalesce(off_map[F.col("_pid")], F.lit(0))
-    else:
-        offset = F.lit(0)  # empty schedule: typed map() literal won't resolve
-    w = Window.partitionBy("_pid").orderBy(*_order())
+    The ranking is _range_rank's: free its localCheckpoint with
+    release_checkpoints(result) once the last action on the result ran."""
+    parts, rank = _range_rank(scheduled, _order(), n_partitions)
     return parts.select(
         F.lit(round_no).alias("round"),
-        (F.row_number().over(w) + offset).cast("int").alias("seq"),
+        rank.cast("int").alias("seq"),
         "url_canon",
     )
 
@@ -920,10 +878,9 @@ def apportion_budget(weights: DataFrame, total: int,
     apportion 9999 or 10001 of a 10000 budget.
 
     Scale shape: two vocabulary-sized apportionment scans (sum W, then
-    sum of bases) and ONE global ranking of remainders — done with the
-    same range-partition + per-partition rank + offset technique as
-    emit ordering (no SinglePartition stage; the only driver traffic is
-    n_partitions partition counts). Hosts are ~10^8 at the 10^10-URL
+    sum of bases) and ONE global ranking of remainders — the same
+    _range_rank as emit ordering (no SinglePartition stage; the only
+    driver traffic is n_partitions partition counts). Hosts are ~10^8 at the 10^10-URL
     design point: trivially rankable this way every round.
 
     Weights must be non-negative; total*max(weight) must fit in int64
@@ -932,7 +889,6 @@ def apportion_budget(weights: DataFrame, total: int,
     remainder ranking reads a localCheckpoint; free it with
     release_checkpoints(result) after the last action on the result.
     """
-    spark = weights.sparkSession
     w_sum = weights.agg(F.sum(F.col(weight_col).cast("long"))).collect()[0][0]
     if not w_sum:  # empty input or all-zero weights: nothing to divide
         return weights.select(F.col(key_col).alias("key"),
@@ -949,24 +905,8 @@ def apportion_budget(weights: DataFrame, total: int,
         F.expr(f"_prod % {int(w_sum)}").alias("rem"),
     )
     leftover = total - based.agg(F.sum("base")).collect()[0][0]
-    n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    order = [F.col("rem").desc(), F.col("key").asc()]
-    parts = (
-        based.repartitionByRange(n, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    cnts = {r["_pid"]: r["n"]
-            for r in parts.groupBy("_pid").agg(F.count("*").alias("n")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(cnts):
-        offsets[pid] = acc
-        acc += cnts[pid]
-    off_map = F.create_map(
-        *[x for pid in sorted(cnts) for x in (F.lit(pid), F.lit(offsets[pid]))]
-    ) if cnts else None
-    offset = F.coalesce(off_map[F.col("_pid")], F.lit(0)) if cnts else F.lit(0)
-    rank = F.row_number().over(Window.partitionBy("_pid").orderBy(*order)) + offset
+    parts, rank = _range_rank(
+        based, [F.col("rem").desc(), F.col("key").asc()], n_partitions)
     return parts.select(
         "key",
         (F.col("base") + (rank <= F.lit(leftover)).cast("long")).alias("quota"),

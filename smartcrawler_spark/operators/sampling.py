@@ -239,32 +239,27 @@ def quota_sample(df: DataFrame, quotas: DataFrame, group_col: str = "lang",
     quota). `quotas` is a (group, quota) dim — typically
     frontier.apportion_budget output — broadcast onto the corpus.
 
-    Same two-phase salted ranking as uniform_sample_k, generalized to a
-    PER-GROUP k: phase 1 ranks within (group, salt) and keeps each
-    salt's local top-quota (bounding any task to |g|/n_salts rows),
-    phase 2 re-ranks the <= n_salts*quota survivors. Deterministic,
-    engine-portable draws: membership is a pure function of
-    (id, salt-string), append-stable like every sampler here. Phase-2
-    groups hold up to n_salts*quota rows — sized for sample quotas well
-    under stratum size; for keep-most filtering use weighted_sample."""
+    Ranks through frontier.top_k_per_group with the broadcast quota as
+    the per-row limit column, salted on the id (bounding any task to
+    |g|/n_salts rows). Deterministic, engine-portable draws: membership is
+    a pure function of (id, salt-string), append-stable like every sampler
+    here. Phase-2 groups hold up to n_salts*quota rows — sized for sample
+    quotas well under stratum size; for keep-most filtering use
+    weighted_sample."""
+    from .frontier import top_k_per_group
+
     dim = F.broadcast(quotas.select(
         F.col(group_col).alias("_g"), F.col(quota_col).alias("_quota")))
     draw = F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|"),
                           F.lit(salt)))
-    salted = (
+    drawn = (
         df.join(dim, F.col(group_col) == F.col("_g"), "inner").drop("_g")
         .withColumn("_draw", draw)
-        .withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_salts)))
     )
-    w1 = Window.partitionBy(group_col, "_salt").orderBy(
-        F.col("_draw").asc(), F.col(id_col).asc())
-    phase1 = (salted.withColumn("_rn1", F.row_number().over(w1))
-              .filter(F.col("_rn1") <= F.col("_quota")))
-    w2 = Window.partitionBy(group_col).orderBy(
-        F.col("_draw").asc(), F.col(id_col).asc())
-    return (phase1.withColumn("_rn2", F.row_number().over(w2))
-            .filter(F.col("_rn2") <= F.col("_quota"))
-            .drop("_quota", "_draw", "_salt", "_rn1", "_rn2"))
+    return top_k_per_group(
+        drawn, [group_col], [F.col("_draw").asc(), F.col(id_col).asc()],
+        "_quota", n_salts, salt_on=id_col,
+    ).drop("_quota", "_draw")
 
 
 def stratified_sample(df: DataFrame, total: int, group_col: str = "lang",

@@ -148,7 +148,7 @@ def recrawl_intervals(rates: DataFrame, base_interval: int,
     (rate_ppm ≈ 10^6) is re-fetched every `base_interval` rounds; one
     that changed a tenth of the time waits 10× longer — the
     uniform-allocation revisit policy, integer-exact.  Output
-    (key, rate_ppm, interval); feed to `frontier.refresh_due_adaptive`."""
+    (key, rate_ppm, interval); feed to `frontier.refresh_due(..., intervals=)`."""
     # integer div (not floor of double /) — see change_rate_ppm
     iv = F.expr(f"({int(base_interval)} * 1000000) div rate_ppm")
     iv = F.greatest(iv, F.lit(min_interval))

@@ -126,7 +126,7 @@ class EngineConfig:
     # artifact jobs/run_freshness.py derives from two corpus snapshots
     # (corpus_diff -> change_rate_ppm -> recrawl_intervals). When set
     # (requires refresh_interval, which becomes the fallback for hosts
-    # with no estimate), stale-row selection runs refresh_due_adaptive:
+    # with no estimate), refresh_due ranks stale rows against the dim:
     # frequently-changing hosts recrawl sooner, static hosts later.
     retry_base_backoff: int | None = None
     # ^ failure retry: FAILED rows re-enter the schedule pool once
@@ -779,18 +779,12 @@ class CrawlJob:
             # recrawl: stale SUCCESS rows rejoin the pool and compete with
             # new URLs inside the same per-host politeness budget; the
             # fetch MERGE then stamps them with this round's round_fetched
-            if self.cfg.refresh_intervals_path:
-                ivs = self.spark.read.parquet(
-                    self.cfg.refresh_intervals_path)
-                due = FR.refresh_due_adaptive(
-                    frontier, round_no, ivs, self.cfg.refresh_interval,
-                    max_per_round=self.cfg.refresh_max_per_round,
-                )
-            else:
-                due = FR.refresh_due(
-                    frontier, round_no, self.cfg.refresh_interval,
-                    max_per_round=self.cfg.refresh_max_per_round,
-                )
+            ivs = (self.spark.read.parquet(self.cfg.refresh_intervals_path)
+                   if self.cfg.refresh_intervals_path else None)
+            due = FR.refresh_due(
+                frontier, round_no, self.cfg.refresh_interval, intervals=ivs,
+                max_per_round=self.cfg.refresh_max_per_round,
+            )
             pool = pool.unionByName(due.select(*sched_cols))
         if self.cfg.retry_base_backoff:
             # failure retry: FAILED rows past their exponential backoff

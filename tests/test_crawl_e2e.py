@@ -522,7 +522,7 @@ def test_apportion_total_enforces_global_round_budget(spark, corpus, tmp_path):
 
 
 def test_refresh_intervals_path_adaptive(spark, corpus, tmp_path):
-    """refresh_intervals_path wires refresh_due_adaptive into the loop:
+    """refresh_intervals_path wires refresh_due's interval dim into the loop:
     hosts in the dim recrawl on THEIR interval, hosts absent fall back
     to refresh_interval, and a huge interval suppresses recrawl."""
     d, manifest = corpus

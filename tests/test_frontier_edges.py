@@ -135,15 +135,51 @@ def test_admit_bypass_equals_single_window_rank(spark):
         t.unpersist()
 
 
-def test_top_k_per_group_plan_is_two_phase(spark):
+@pytest.mark.parametrize("k", [3, "_k"], ids=["int", "column"])
+def test_top_k_per_group_plan_is_two_phase(spark, k):
     """Plan audit: two Window nodes (salted then exact) — the skew guard is
-    structural, not incidental."""
+    structural, not incidental — whether k is an int or a limit column."""
     df = cands(spark, [_row(f"https://h.com/{i}", score=float(i)) for i in range(20)])
-    out = FR.top_k_per_group(df, ["host"], [F.col("score").desc(), F.col("url_canon")], k=3)
+    df = df.withColumn("_k", F.lit(3))
+    out = FR.top_k_per_group(df, ["host"], [F.col("score").desc(), F.col("url_canon")], k=k)
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted"
     )
     assert plan.count("Window") >= 2
+    assert out.count() == 3
+
+
+def test_top_k_per_group_limit_column_equals_single_window(spark):
+    """A per-row limit column ranks exactly like a single-window
+    row_number <= limit brute force — including a group whose limit is 0
+    (nothing kept) and one whose limit exceeds its size (everything kept)."""
+    import random
+
+    from pyspark.sql import Window
+
+    rng = random.Random(5)
+    limits = {"hot.com": 7, "zero.com": 0, "small.com": 50, "one.com": 1}
+    sizes = {"hot.com": 300, "zero.com": 20, "small.com": 9, "one.com": 4}
+    rows = []
+    for host, n in sizes.items():
+        for i in range(n):
+            rows.append((f"https://{host}/p{i}", rng.getrandbits(60), host,
+                         i % 11 == 0, float(rng.randrange(6)), limits[host]))
+    df = spark.createDataFrame(rows, CAND_SCHEMA + ", lim int")
+    order = [F.col("is_root").desc(), F.col("score").desc(),
+             F.col("url_canon").asc()]
+    got = {r["url_canon"] for r in
+           FR.top_k_per_group(df, ["host"], order, "lim",
+                              salt_on="url_canon").collect()}
+    w = Window.partitionBy("host").orderBy(*order)
+    ref = {r["url_canon"] for r in
+           df.withColumn("_rn", F.row_number().over(w))
+           .filter(F.col("_rn") <= F.col("lim")).collect()}
+    assert got == ref
+    per_host = {h: sum(1 for u in got if u.startswith(f"https://{h}/"))
+                for h in sizes}
+    assert per_host == {"hot.com": 7, "zero.com": 0, "small.com": 9,
+                        "one.com": 1}
 
 
 def test_cuckoo_overflow_marks_bucket_degraded_df(spark):
@@ -244,7 +280,7 @@ def test_change_rate_and_intervals_hand_oracle(spark):
     assert ivs0 == {"a.com": 1, "b.com": 1, "c.com": 1}
 
 
-def test_refresh_due_adaptive_per_host_intervals(spark):
+def test_refresh_due_per_host_intervals(spark):
     from smartcrawler_spark.plans.analysis import (change_rate_ppm,
                                                    recrawl_intervals)
 
@@ -264,8 +300,8 @@ def test_refresh_due_adaptive_per_host_intervals(spark):
         [("a.com", 1_000_000, 2), ("b.com", 100_000, 10)],
         "key string, rate_ppm long, interval int")
     due = {r["url_canon"]: r["rounds_stale"]
-           for r in FR.refresh_due_adaptive(fr, round_no=20, intervals=ivs,
-                                            default_interval=5).collect()}
+           for r in FR.refresh_due(fr, round_no=20, interval=5,
+                                   intervals=ivs).collect()}
     # a/x stale 6 >= 2 yes; a/y stale 3 >= 2 yes; b/x stale 6 >= 10 no;
     # c/x stale 8 >= 5 yes; c/y stale 4 >= 5 no
     assert due == {"https://a.com/x": 6, "https://a.com/y": 3,
@@ -277,12 +313,13 @@ def test_refresh_due_adaptive_per_host_intervals(spark):
     est = recrawl_intervals(change_rate_ppm(hist), base_interval=2,
                             max_interval=10)
     due2 = {r["url_canon"]
-            for r in FR.refresh_due_adaptive(fr, 20, est, 5).collect()}
+            for r in FR.refresh_due(fr, 20, 5, intervals=est).collect()}
     # a.com ppm=750000 -> iv 2; b.com ppm=250000 -> iv 8; c default 5
     assert due2 == {"https://a.com/x", "https://a.com/y",
                     "https://c.com/x"}
     # cap keeps the stalest
-    capped = FR.refresh_due_adaptive(fr, 20, ivs, 5, max_per_round=1).collect()
+    capped = FR.refresh_due(fr, 20, 5, intervals=ivs,
+                            max_per_round=1).collect()
     assert [r["url_canon"] for r in capped] == ["https://c.com/x"]
 
 
